@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.NormalizeText
-import graft.sources.Html
-import graft.sources.Html.Cell
+import graft.sources.{Html, HtmlNode}
 
 /** The air-quality report ETL (SURVEY §7 Phase 1) — the reference's
   * whole pipeline (/root/reference/scrapper.py:130-186) re-expressed as
@@ -41,7 +40,7 @@ object AirQualityEtl {
     * scalar divs. Returns None when the date is unparseable — the
     * validation gate that aborts the batch
     * (/root/reference/scrapper.py:139-144, SURVEY §2 P3). */
-  def parseMeta(doc: graft.sources.HtmlNode, cfg: EtlConfig = EtlConfig.default): Option[ReportMeta] = {
+  def parseMeta(doc: HtmlNode, cfg: EtlConfig = EtlConfig.default): Option[ReportMeta] = {
     val ids = cfg.divIds
     for {
       dateDiv <- doc.byId(ids("date_text"))
@@ -78,8 +77,8 @@ object AirQualityEtl {
   /** Data rows (header skipped) of the table under the given div, as
     * serializable raw rows — runs driver-side here, executor-side when
     * called from flatMap. */
-  def rawRows(html: String, divId: String, dataFromRow: Int): Seq[RawRow] =
-    Html.tableRows(Html.parse(html), divId).drop(dataFromRow).map { cells =>
+  def rawRows(doc: HtmlNode, divId: String, dataFromRow: Int): Seq[RawRow] =
+    Html.tableRows(doc, divId).drop(dataFromRow).map { cells =>
       RawRow(cells.map(_.text), cells.map(_.imgSrc.getOrElse("")))
     }
 
@@ -88,13 +87,13 @@ object AirQualityEtl {
     * constant date columns, Hungarian renames, casts. */
   def readingsDf(
       spark: SparkSession,
-      html: String,
+      doc: HtmlNode,
       meta: ReportMeta,
       nameCol: String, // "alcaldia_str" | "municipio_str"
       divId: String,
       cfg: EtlConfig = EtlConfig.default): DataFrame = {
     import spark.implicits._
-    val raw: Dataset[RawRow] = spark.createDataset(rawRows(html, divId, cfg.dataFromRow))
+    val raw: Dataset[RawRow] = spark.createDataset(rawRows(doc, divId, cfg.dataFromRow))
     graft.functions.Functions.register(spark)
     raw
       // P2: the reference skips rows with < 4 cells (scrapper.py:94-95)
@@ -155,8 +154,8 @@ object AirQualityEtl {
     val meta = parseMeta(doc, cfg).getOrElse(
       throw new IllegalArgumentException("report date unparseable — aborting batch"))
     Batch(
-      cdmx = readingsDf(spark, html, meta, "alcaldia_str", cfg.divIds("cdmx_table"), cfg),
-      edomex = readingsDf(spark, html, meta, "municipio_str", cfg.divIds("edomex_table"), cfg),
+      cdmx = readingsDf(spark, doc, meta, "alcaldia_str", cfg.divIds("cdmx_table"), cfg),
+      edomex = readingsDf(spark, doc, meta, "municipio_str", cfg.divIds("edomex_table"), cfg),
       gralStats = gralStatsDf(spark, meta),
       meta = meta)
   }
@@ -191,7 +190,7 @@ object AirQualityEtl {
       parseMeta(doc, cfg) match {
         case None => Iterator.empty // per-page validation gate
         case Some(m) =>
-          rawRows(html, divId, fromRow).iterator.map(r =>
+          rawRows(doc, divId, fromRow).iterator.map(r =>
             ArchiveRow(m.reportTs, m.reportTsLegacy, m.year, m.monthNum,
               m.monthDay, m.hour, m.weekDay, m.monthName, r.texts, r.imgs))
       }
@@ -221,19 +220,44 @@ object AirQualityEtl {
     * the batch touches (an hourly batch touches exactly one) — the
     * reference's per-table transaction at partition granularity.
     * `p_date` = yyyymmdd prefix of `report_ts`, so it is functionally
-    * determined by every table's key. */
+    * determined by every table's key.
+    *
+    * The three tables share no data, so their upserts run at the same
+    * time, one thread each. Each table keeps its own atomic commit and
+    * its own CAS check; only the order in which the commits land is
+    * open. The threads are started here rather than taken from a pool,
+    * so they inherit this thread's Spark local properties (job group,
+    * scheduler pool, SQL execution id) as they are now, never a stale
+    * copy from an earlier task.
+    *
+    * Failure: every upsert runs to its end before this returns or
+    * throws (unless the calling thread is interrupted while it waits).
+    * If any failed, the first failure (in the order cdmx,
+    * edomex, gral_stats) is thrown with the others attached as
+    * suppressed; by then every table whose upsert did not fail is
+    * already committed, and a failed table is left as it was. Running
+    * the whole batch again bumps `nupdates` a second time on the
+    * tables that did commit. */
   def runBatch(spark: SparkSession, store: graft.operators.TableStore, html: String,
       cfg: EtlConfig = EtlConfig.default): Batch = {
     val b = batchFromHtml(spark, html, cfg)
-    def withDate(df: DataFrame): DataFrame =
-      df.withColumn("p_date", (col("report_ts") / 100).cast("int"))
-    // hourly report tables are micro-batch-sized — one output file each
-    store.upsertPartitioned(spark, "cdmx", withDate(b.cdmx),
-      cfg.tableKeys("cdmx"), "p_date", numFiles = Some(1))
-    store.upsertPartitioned(spark, "edomex", withDate(b.edomex),
-      cfg.tableKeys("edomex"), "p_date", numFiles = Some(1))
-    store.upsertPartitioned(spark, "gral_stats", withDate(b.gralStats),
-      cfg.tableKeys("gral_stats"), "p_date", numFiles = Some(1))
-    b
+    val tables = Seq("cdmx" -> b.cdmx, "edomex" -> b.edomex, "gral_stats" -> b.gralStats)
+    val failures = new Array[Throwable](tables.size)
+    val threads = tables.zipWithIndex.map { case ((table, df), i) =>
+      val t = new Thread(() =>
+        // hourly report tables are micro-batch-sized — one output file each
+        try store.upsertPartitioned(spark, table,
+          df.withColumn("p_date", (col("report_ts") / 100).cast("int")),
+          cfg.tableKeys(table), "p_date", numFiles = Some(1))
+        catch { case e: Throwable => failures(i) = e },
+        s"runBatch-$table")
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      case _ => b
+    }
   }
 }

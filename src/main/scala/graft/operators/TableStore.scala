@@ -4,6 +4,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Process-wide tally of warm-store lookups (`TableStore.exists`), for
@@ -1635,12 +1636,13 @@ final class TableStore(val root: String, val retain: Int = 0) {
 
   /** Keyed MERGE with `nupdates` counter semantics
     * (scrapper.py:196-206). First batch on a missing table inserts
-    * everything with nupdates = 1. */
-  /** @param numFiles target file count for the rewrite — pass Some(1)
+    * everything with nupdates = 1.
+    *
+    * @param numFiles target file count for the rewrite — pass Some(1)
     *   for micro-batch-sized tables (one tiny file instead of one
     *   near-empty file per shuffle partition); leave None for big
-    *   tables so write parallelism follows the plan. */
-  /** @param batchId replay guard for at-least-once drivers
+    *   tables so write parallelism follows the plan.
+    * @param batchId replay guard for at-least-once drivers
     *   (foreachBatch re-runs a batch after failure): a batch whose id
     *   is <= the last committed one is a no-op, so the non-idempotent
     *   counter bump applies exactly once per logical batch. Ids must
@@ -1702,8 +1704,11 @@ final class TableStore(val root: String, val retain: Int = 0) {
     * date prefix of the key) — otherwise a key could "move" between
     * partitions and duplicate. Int-valued partition columns round-trip
     * hive partition-type inference losslessly; prefer them (e.g.
-    * yyyymmdd) over date/string values. */
-  /** @param batchId replay guard, same contract as `upsert`: the id
+    * yyyymmdd) over date/string values.
+    *
+    * @param numFiles target file count for each touched partition's
+    *   rewrite, same contract as `upsert`.
+    * @param batchId replay guard, same contract as `upsert`: the id
     *   commits atomically inside the partition manifest rename, so an
     *   at-least-once driver's replayed batch is a no-op instead of
     *   re-bumping counters in partitions that already committed. */
@@ -1734,8 +1739,14 @@ final class TableStore(val root: String, val retain: Int = 0) {
             "implicitly in partitioned mode — run widenPartitioned first (a one-time " +
             "all-partition sweep under one atomic commit), then upsert")
         // touched partition values: bounded driver collect — one value
-        // per partition the micro-batch touches, not per row
-        val touched = updates.select(partCol).distinct().collect().map(_.get(0)).toSeq
+        // per partition the micro-batch touches, not per row. A batch
+        // already on the driver (the plan folds to a LocalRelation) is
+        // answered without a Spark job; any other plan runs distinct().
+        val partVals = updates.select(partCol)
+        val touched = (partVals.queryExecution.optimizedPlan match {
+          case _: LocalRelation => partVals.collect().distinct
+          case _ => partVals.distinct().collect()
+        }).map(_.get(0)).toSeq
         Upsert.merge(prunedRead(spark, name, partCol, touched), updates, keys, Some(counterCol))
       }
     replacePartitions(spark, name, numFiles.fold(merged)(merged.coalesce), partCol,

@@ -2,7 +2,10 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.lit
 
 import graft.SparkSpec
 import graft.operators.TableStore
@@ -106,5 +109,37 @@ class AirQualityEtlSpec extends SparkSpec {
     assert(cdmx.length == 8)
     assert(cdmx.forall(_.getAs[Long]("nupdates") == 1L))
     assert(cdmx.map(_.getAs[Long]("report_ts")).toSet == Set(2025050509L, 2025050510L))
+  }
+
+  test("upsert: a failing table surfaces only after the other two commit; no table is half-written") {
+    val store = freshStore()
+    // edomex committed in whole-table mode first: runBatch's partitioned
+    // commit to it must hit the mode guard
+    val b = AirQualityEtl.batchFromHtml(spark, html)
+    store.upsert(spark, "edomex", b.edomex.withColumn("p_date", lit(20250505)),
+      EtlConfig.default.tableKeys("edomex"))
+    def rows(t: String) = store.read(spark, t).collect().map(_.toString).sorted.toSeq
+    val edomexBefore = rows("edomex")
+
+    val err = intercept[IllegalArgumentException](AirQualityEtl.runBatch(spark, store, html))
+    assert(err.getMessage.contains("whole-table versioned mode"), err.getMessage)
+    // by the time the error reaches the caller, no commit thread runs
+    // and the other two tables are fully committed
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("runBatch-")))
+    val cdmx = store.read(spark, "cdmx").collect()
+    assert(cdmx.length == 4 && cdmx.forall(_.getAs[Long]("nupdates") == 1L))
+    val gral = store.read(spark, "gral_stats").collect()
+    assert(gral.length == 1 && gral.head.getAs[Long]("nupdates") == 1L)
+    assert(rows("edomex") == edomexBefore) // the failed table is untouched
+
+    // no staged or unreferenced version dirs are left behind
+    val root = Paths.get(store.root)
+    val referenced = (store.currentVersionId(spark, "edomex").map(v => s"edomex/$v") ++
+      Seq("cdmx", "gral_stats").flatMap(t => store.partitionedLeafPaths(spark, t).get
+        .map(_.stripPrefix(s"${store.root}/")))).toSet
+    val dirs = Files.walk(root).iterator.asScala.filter(Files.isDirectory(_))
+      .map(d => root.relativize(d).toString).toSeq
+    assert(!dirs.exists(_.split('/').exists(_.startsWith(".tmp-"))), dirs)
+    assert(dirs.filter(_.split('/').last.startsWith("v-")).toSet == referenced, dirs)
   }
 }

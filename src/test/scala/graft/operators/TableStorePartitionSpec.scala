@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 import graft.SparkSpec
 
@@ -59,31 +60,53 @@ class TableStorePartitionSpec extends SparkSpec {
     assert(got("b") == ("y", 1L))  // untouched key in same partition kept
   }
 
-  test("a batch rewrites ONLY its partitions; others stay byte-identical") {
+  // The touched partitions are found on the driver when the batch is a
+  // local relation, and by a distinct() job for any other plan; the
+  // contract is checked on both: a one-partition batch (the hourly
+  // shape), a driver-local batch over two partitions, and the same
+  // rows as a union of two batches, which Spark must run.
+  private def local(rows: (String, String, Int)*) = {
+    val s = spark; import s.implicits._
+    rows.toDF("k", "v", "p_date")
+  }
+  private val twoParts = Seq(("c", "z2", 20250506), ("d", "w", 20250506), ("e", "u2", 20250507))
+  private val twoPartsWant = Map("c" -> ("z2", 2L), "d" -> ("w", 1L), "e" -> ("u2", 2L))
+  for ((suffix, updates, isLocal, touched, want) <- Seq(
+      ("", () => batch(20250506, Seq("c" -> "z2", "d" -> "w")), true, Set(20250506),
+        Map("c" -> ("z2", 2L), "d" -> ("w", 1L), "e" -> ("u", 1L))),
+      (" (driver-local batch over two partitions)", () => local(twoParts: _*), true,
+        Set(20250506, 20250507), twoPartsWant),
+      (" (two partitions, plan run by Spark)",
+        () => local(twoParts.take(2): _*).union(local(twoParts.drop(2): _*)), false,
+        Set(20250506, 20250507), twoPartsWant)))
+  test(s"a batch rewrites ONLY its partitions; others stay byte-identical$suffix") {
     val store = freshStore()
     store.upsertPartitioned(spark, "t", batch(20250505, Seq("a" -> "x", "b" -> "y")),
       Seq("k"), "p_date", numFiles = Some(1))
     store.upsertPartitioned(spark, "t", batch(20250506, Seq("c" -> "z")),
       Seq("k"), "p_date", numFiles = Some(1))
-    val before = fileState(store, "t")
-    assert(before.keys.exists(_.contains("p_date=20250505")))
-    assert(before.keys.exists(_.contains("p_date=20250506")))
-
-    // touch only day 06
-    store.upsertPartitioned(spark, "t", batch(20250506, Seq("c" -> "z2", "d" -> "w")),
+    store.upsertPartitioned(spark, "t", batch(20250507, Seq("e" -> "u")),
       Seq("k"), "p_date", numFiles = Some(1))
+    val before = fileState(store, "t")
+    def part(state: Map[String, (Long, Long, Int)], day: Int) =
+      state.filter(_._1.contains(s"p_date=$day"))
+    val days = Set(20250505, 20250506, 20250507)
+    assert(days.forall(d => part(before, d).nonEmpty))
+
+    val batchDf = updates()
+    assert(batchDf.select("p_date").queryExecution.optimizedPlan.isInstanceOf[LocalRelation] ==
+      isLocal)
+    store.upsertPartitioned(spark, "t", batchDf, Seq("k"), "p_date", numFiles = Some(1))
     val after = fileState(store, "t")
 
-    val before05 = before.filter(_._1.contains("p_date=20250505"))
-    val after05 = after.filter(_._1.contains("p_date=20250505"))
-    assert(after05 == before05, "untouched partition changed on disk")
-    assert(after.filter(_._1.contains("p_date=20250506")) !=
-      before.filter(_._1.contains("p_date=20250506")))
+    for (d <- days -- touched)
+      assert(part(after, d) == part(before, d), s"untouched partition $d changed on disk")
+    for (d <- touched)
+      assert(part(after, d) != part(before, d), s"touched partition $d not rewritten")
     // and the merge really happened
     val got = store.read(spark, "t").collect()
       .map(r => r.getAs[String]("k") -> (r.getAs[String]("v"), r.getAs[Long]("nupdates"))).toMap
-    assert(got == Map("a" -> ("x", 1L), "b" -> ("y", 1L),
-      "c" -> ("z2", 2L), "d" -> ("w", 1L)))
+    assert(got == Map("a" -> ("x", 1L), "b" -> ("y", 1L)) ++ want)
   }
 
   test("the merge's target scan is partition-pruned (PartitionFilters in the plan)") {

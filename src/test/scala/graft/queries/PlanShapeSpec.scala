@@ -232,10 +232,22 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("a16_pagerank: rank table broadcasts into every round; no cartesian against edges") {
-    val p = AnalyticsQueries.all("a16_pagerank")(spark, dir)
+    import org.apache.spark.sql.functions.col
+    // the fixture's graph sits below Graph.DriverMaxEdges, so the query
+    // itself takes the driver loop; the distributed branch is pinned on
+    // the same pairs with the gate forced off
+    val pairs = AnalyticsQueries.copurchaseStore(spark, dir).read(spark, "pairs")
+      .select(col("part_a").as("a"), col("part_b").as("b"))
+    val p = graft.operators.Graph.rankPowerIteration(pairs, rounds = 3,
+        personalized = false, driverMaxEdges = 0)
       .queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p.take(1500))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(1500))
+    // below the bound: the driver loop's ranks re-enter as a local
+    // table, so the query plans no join against the edges at all
+    val gated = AnalyticsQueries.all("a16_pagerank")(spark, dir)
+      .queryExecution.executedPlan.toString
+    assert(gated.contains("LocalTableScan") && !gated.contains("Join"), gated.take(1500))
   }
 
   test("x1_decontam_exact: gram overlap is an equi-join on fingerprints") {
